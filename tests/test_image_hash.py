@@ -121,12 +121,13 @@ def test_phash_corpus_twin_shape():
 def test_image_phash_pairs_on_cluster(spark):
     """Operator == twin: the distributed decode+hash+banding produces
     exactly the within-base pairs the driver-side twin predicts, and
-    the corrupt rows appear in no pair."""
+    the corrupt rows and a null-payload row appear in no pair."""
     from web_template_forensics_spark.operators.dedup import image_phash_pairs
 
     corpus = phash_corpus()
+    null_id = max(r["media_id"] for r in corpus) + 1
     media = spark.createDataFrame(
-        [(r["media_id"], bytearray(r["payload"])) for r in corpus],
+        [(r["media_id"], bytearray(r["payload"])) for r in corpus] + [(null_id, None)],
         "media_id long, payload binary",
     )
     got = {

@@ -5,9 +5,22 @@ MinHash+LSH banded near-dup, SimHash hamming near-dup, n-gram Jaccard
 verification. Candidate generation is always an equi-join on bucket keys
 (band hash / simhash band / md5) — never a cross join — so the shuffle
 volume is O(candidate pairs), the property that survives 100x scale-up.
+
+The banded near-dup family shares two private primitives:
+
+- ``_band_candidates`` — the one (id, band key) self-join with
+  ``dropDuplicates``; ``minhash_lsh_pairs`` and ``hamming_band_pairs``
+  (hence SimHash and every perceptual family) verify its candidates.
+- ``_payload_hashes`` — the one executor-side ``mapInPandas`` loop that
+  turns media payloads into (id, family, 64-bit hash) rows; the image,
+  audio, video and A/V operators differ only in the fingerprint
+  function they pass it.
 """
 
 from __future__ import annotations
+
+import operator
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -46,6 +59,34 @@ def _band_cols(sig_col: str, bands: int, rows_per_band: int) -> list:
     return out
 
 
+def _band_candidates(
+    banded: DataFrame, band_cols: tuple[str, ...], carried: tuple[str, ...] = ()
+) -> DataFrame:
+    """The one banded candidate self-join of the near-dup family.
+
+    ``banded`` holds (_id, *band cols, *group cols, *carried cols) rows:
+    every column that is neither ``_id``, a band column nor carried is a
+    group column. Rows join on the group and band columns with
+    ``_a._id < _b._id``; the result is (*group cols, id_a, id_b,
+    <carried>_a, <carried>_b), deduplicated on (*group cols, id_a, id_b)
+    because a pair agreeing on several bands meets once per band.
+    Callers verify the candidates themselves."""
+    group = [c for c in banded.columns if c not in ("_id", *band_cols, *carried)]
+    a, b = banded.alias("_a"), banded.alias("_b")
+    on = [F.col(f"_a.{c}") == F.col(f"_b.{c}") for c in (*group, *band_cols)]
+    on.append(F.col("_a._id") < F.col("_b._id"))
+    return (
+        a.join(b, reduce(operator.and_, on))
+        .select(
+            *[F.col(f"_a.{c}").alias(c) for c in group],
+            F.col("_a._id").alias("id_a"),
+            F.col("_b._id").alias("id_b"),
+            *[F.col(f"_{s}.{c}").alias(f"{c}_{s}") for s in "ab" for c in carried],
+        )
+        .dropDuplicates([*group, "id_a", "id_b"])
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -79,15 +120,16 @@ def minhash_lsh_pairs(
     # empty doc. JVM-side predicate, same ASCII-\S semantics as the
     # shingle tokenizer (Java \s is ASCII-only, matching ASCII_TOKEN_RE).
     df = df.filter(F.regexp_count(F.col(text_col), F.lit(r"\S")) > 0)
-    # ONE tokenize+md5+signature pass materialized behind ONE exchange
-    # (round 7): signature and shingle arrays come from a single combined
-    # UDF, and the repartition("_id") puts an Exchange ABOVE the Python
-    # stage that every consumer (band-join probe AND build, both
-    # verification sides) reuses — the r6 shape computed the UDFs below
-    # the join/broadcast boundaries, so the text was scanned and shingled
-    # once per consumer (4x with broadcast build sides). At 100 TB this
-    # is the §2.4 move: the corpus text is read once; only the ~1 KB/doc
-    # signature rows pass through the shared exchange.
+    # Signature and shingle arrays come from ONE combined UDF, and the
+    # repartition("_id") puts the Exchange ABOVE the Python stage, so
+    # the band join's two sides share one exchange and the two
+    # verification sides share another (the r6 shape computed the UDFs
+    # below the join/broadcast boundaries: 4x with broadcast build
+    # sides). The stage still runs TWICE, not once: column pruning
+    # splits ``base`` into an (_id, _sig) exchange for the band join and
+    # an (_id, _sh) exchange for verification, each over its own
+    # ArrowEvalPython minhash_and_shingles_udf — pinned as a strict xfail
+    # in tests/test_hash_stage_once.py.
     from ..functions.text_udfs import minhash_and_shingles_udf
 
     base = (
@@ -104,16 +146,7 @@ def minhash_lsh_pairs(
         "_id",
         F.explode(F.array(*_band_cols("_sig", bands, rows_per_band))).alias("band_key"),
     )
-    ba, bb = banded.alias("_ba"), banded.alias("_bb")
-    cand = (
-        ba.join(
-            bb,
-            (F.col("_ba.band_key") == F.col("_bb.band_key"))
-            & (F.col("_ba._id") < F.col("_bb._id")),
-        )
-        .select(F.col("_ba._id").alias("id_a"), F.col("_bb._id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand = _band_candidates(banded, ("band_key",))
     sh = base.select("_id", "_sh")
     sa, sb = sh.alias("_sa"), sh.alias("_sb")
     paired = (
@@ -193,18 +226,30 @@ def band_struct_cols(max_hamming: int, n_bands: int | None = None) -> list:
     return band_structs
 
 
+def _explode_bands(hashed: DataFrame, max_hamming: int, n_bands: int | None) -> DataFrame:
+    """Every column of ``hashed`` plus (band_no, band_val), one row per
+    pigeonhole band of its ``_sh`` — the batch and streaming faces band
+    identically."""
+    cols = hashed.columns
+    return hashed.select(
+        *cols, F.explode(F.array(*band_struct_cols(max_hamming, n_bands))).alias("band")
+    ).select(*cols, "band.band_no", "band.band_val")
+
+
 def hamming_band_pairs(
     hashed: DataFrame, max_hamming: int, n_bands: int | None = None
 ) -> DataFrame:
-    """(_id long, _sh long) -> (id_a, id_b, hamming) for every pair
-    within ``max_hamming`` of the 64-bit hash — the banding machinery
-    shared by SimHash (text) and pHash (image) near-dup.
+    """(_id long, *group cols, _sh long) -> (*group cols, id_a, id_b,
+    hamming) for every pair within ``max_hamming`` of the 64-bit hash
+    that agrees on every group column — the banding machinery shared by
+    SimHash (text), pHash (image), audio, video and A/V near-dup. Every
+    column other than ``_id`` and ``_sh`` is a group column (A/V bands
+    its two families apart through a ``family`` column).
 
     Pigeonhole-sound: with ``n_bands >= max_hamming + 1`` a pair within
     the radius must agree on at least one band key, so the band
     equi-join has exact recall. Verification is JVM-side
     bit_count(a XOR b). Shuffle carries (id, hash, band) only."""
-    band_structs = band_struct_cols(max_hamming, n_bands)
     # repartition("_id") materializes the upstream hash computation
     # (cheap for simhash, a FULL IMAGE DECODE for pHash) behind one
     # 16-byte/row Exchange that both join sides reuse. The r1-r6 shape
@@ -220,30 +265,115 @@ def hamming_band_pairs(
     # ONE partition, which then serializes the expensive candidate
     # fan-out of the band join downstream (measured 4x slower)
     n_parts = hashed.sparkSession.sparkContext.defaultParallelism
-    banded = hashed.repartition(n_parts, "_id").select(
-        "_id", "_sh", F.explode(F.array(*band_structs)).alias("band")
-    ).select("_id", "_sh", "band.band_no", "band.band_val")
-    a, b = banded.alias("_a"), banded.alias("_b")
-    cand = (
-        a.join(
-            b,
-            (F.col("_a.band_no") == F.col("_b.band_no"))
-            & (F.col("_a.band_val") == F.col("_b.band_val"))
-            & (F.col("_a._id") < F.col("_b._id")),
-        )
-        .select(
-            F.col("_a._id").alias("id_a"),
-            F.col("_a._sh").alias("sh_a"),
-            F.col("_b._id").alias("id_b"),
-            F.col("_b._sh").alias("sh_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    banded = _explode_bands(hashed.repartition(n_parts, "_id"), max_hamming, n_bands)
+    cand = _band_candidates(banded, ("band_no", "band_val"), ("_sh",))
     return (
-        cand.withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
+        cand.withColumn("hamming", F.bit_count(F.col("_sh_a").bitwiseXOR(F.col("_sh_b"))))
         .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+        .drop("_sh_a", "_sh_b")
     )
+
+
+def _payload_hashes(media: DataFrame, id_col: str, payload_col: str, fingerprint) -> DataFrame:
+    """The one executor-side payload loop of the perceptual family ->
+    (_id long, family string, _sh long).
+
+    ``fingerprint(payload: bytes)`` returns the row's (family, unsigned
+    64-bit hash) tuples — none, one, or one per demuxed track. A null
+    payload is fingerprinted as ``b""``; ``ValueError`` (corrupt or
+    unrecognised payload) and ``NotImplementedError`` (codec seam) drop
+    the row, since it has no perceptual identity to match on. Payload
+    bytes never leave this stage: only 16-byte hash rows shuffle."""
+    import pandas as pd
+
+    from ..functions.image_hash import phash_to_signed
+
+    def op(batches):
+        for pdf in batches:
+            ids: list[int] = []
+            fams: list[str] = []
+            hs: list[int] = []
+            for r in pdf[[id_col, payload_col]].itertuples(index=False):
+                try:
+                    emitted = fingerprint(bytes(r[1]) if r[1] is not None else b"")
+                except (ValueError, NotImplementedError):
+                    continue
+                for fam, h in emitted:
+                    ids.append(int(r[0]))
+                    fams.append(fam)
+                    hs.append(phash_to_signed(h))
+            yield pd.DataFrame(
+                {
+                    "_id": pd.array(ids, dtype="int64"),
+                    "family": pd.array(fams, dtype="string"),
+                    "_sh": pd.array(hs, dtype="int64"),
+                }
+            )
+
+    return media.select(
+        F.col(id_col).alias(id_col), F.col(payload_col).alias(payload_col)
+    ).mapInPandas(op, "_id long, family string, _sh long")
+
+
+def _image_fingerprint(payload: bytes) -> list[tuple[str, int]]:
+    """PNG / JPEG / GIF / WebP-lossless -> [("image", pHash)]."""
+    from ..functions.image_hash import phash64
+    from .multimodal import decode_image
+
+    return [("image", phash64(decode_image(payload)))]
+
+
+def _audio_fingerprint(payload: bytes) -> list[tuple[str, int]]:
+    """WAV / FLAC -> [("audio", fingerprint)]; any other payload -> []."""
+    from ..functions.audio_hash import audio_hash64
+    from ..functions.flac_codec import decode_flac, is_flac
+    from ..functions.wav_codec import decode_wav, is_wav
+
+    if is_wav(payload):
+        samples, _rate = decode_wav(payload)
+    elif is_flac(payload):
+        # FLAC decodes to the EXACT source samples, so a WAV<->FLAC
+        # re-containering is a hamming-0 pair
+        samples, _rate = decode_flac(payload)
+    else:
+        return []
+    return [("audio", audio_hash64(samples))]
+
+
+def _video_fingerprint(payload: bytes, max_frames: int = 8) -> list[tuple[str, int]]:
+    """MJPEG / animated GIF / animated WebP -> [("video", fingerprint)];
+    anything else raises ValueError. Lossy-codec seams (e.g. lossy WebP
+    frames) raise NotImplementedError."""
+    from ..functions.video_hash import video_payload_hash64
+
+    return [("video", video_payload_hash64(payload, max_frames))]
+
+
+def _av_fingerprint(payload: bytes) -> list[tuple[str, int]]:
+    """AVI / MP4 -> one tuple per decodable track (video and/or audio);
+    a standalone clip -> its audio or video fingerprint."""
+    from ..functions.audio_hash import audio_hash64
+    from ..functions.avi_codec import demux_avi, is_avi
+    from ..functions.mp4_codec import demux_mp4, is_mp4
+    from ..functions.video_hash import video_payload_hash64
+
+    if is_avi(payload):
+        # raises NotImplementedError for non-MJPG/non-PCM AVIs (XviD,
+        # MP3-in-AVI) -> the row drops
+        vf, samples, _rate = demux_avi(payload)
+    elif is_mp4(payload):
+        # skip_unsupported: an avc1/mp4a track has no computable
+        # identity, but a sibling jpeg/PCM track in the same file still
+        # fingerprints
+        vf, samples, _rate = demux_mp4(payload, skip_unsupported=True)
+    else:
+        return _audio_fingerprint(payload) or _video_fingerprint(payload)
+    out = []
+    if vf:
+        out.append(("video", video_payload_hash64(b"".join(vf))))
+    if samples.shape[0]:
+        out.append(("audio", audio_hash64(samples)))
+    return out
 
 
 def image_phash_pairs(
@@ -255,42 +385,18 @@ def image_phash_pairs(
 ) -> DataFrame:
     """Perceptual near-duplicate image pairs -> (id_a, id_b, hamming).
 
-    Stage 1 decodes each payload ON EXECUTORS (Arrow-batched
-    ``mapInPandas`` — the expensive, embarrassingly-parallel part) and
-    emits only (id, 64-bit pHash): payload bytes never shuffle, the
-    pairing stage moves 16 bytes/row no matter how large the images
-    are. Stage 2 is the shared pigeonhole banding (exact recall at the
-    radius). Rows whose payload fails to decode are DROPPED from
-    pairing — a corrupt image has no perceptual identity to match on
-    (callers wanting an audit trail join the output back against the
-    input ids). Default radius 6 is comfortably inside the measured
-    operating point: same image re-encoded across JPEG quality
+    Stage 1 decodes each payload ON EXECUTORS (``_payload_hashes``, the
+    expensive, embarrassingly-parallel part) and emits only (id, 64-bit
+    pHash); stage 2 is the shared pigeonhole banding (exact recall at
+    the radius). Rows whose payload is null or fails to decode are
+    DROPPED from pairing — a corrupt image has no perceptual identity
+    to match on (callers wanting an audit trail join the output back
+    against the input ids). Default radius 6 is comfortably inside the
+    measured operating point: same image re-encoded across JPEG quality
     70-92/progressive/PNG lands at hamming <= 2 on this package's own
     codecs, while distinct textures sit >= 20."""
-    import pandas as pd
-
-    from ..functions.image_hash import phash64, phash_to_signed
-    from .multimodal import decode_image
-
-    def op(batches):
-        for pdf in batches:
-            ids: list[int] = []
-            hs: list[int] = []
-            for r in pdf[[id_col, payload_col]].itertuples(index=False):
-                try:
-                    img = decode_image(bytes(r[1]))
-                except (ValueError, NotImplementedError):
-                    continue
-                ids.append(int(r[0]))
-                hs.append(phash_to_signed(phash64(img)))
-            yield pd.DataFrame(
-                {"_id": pd.array(ids, dtype="int64"), "_sh": pd.array(hs, dtype="int64")}
-            )
-
-    hashed = media.select(
-        F.col(id_col).alias(id_col), F.col(payload_col).alias(payload_col)
-    ).mapInPandas(op, "_id long, _sh long")
-    return hamming_band_pairs(hashed, max_hamming, n_bands)
+    hashed = _payload_hashes(media, id_col, payload_col, _image_fingerprint)
+    return hamming_band_pairs(hashed.drop("family"), max_hamming, n_bands)
 
 
 def audio_fingerprint_pairs(
@@ -302,48 +408,15 @@ def audio_fingerprint_pairs(
 ) -> DataFrame:
     """Perceptual near-duplicate audio pairs -> (id_a, id_b, hamming).
 
-    The audio sibling of ``image_phash_pairs``: decode RIFF/WAVE on
-    executors, emit only (id, 64-bit gain-invariant time-frequency
-    fingerprint), then the shared pigeonhole banding — payload bytes
-    never shuffle, recall is exact at the radius, corrupt/non-WAV rows
-    are dropped (no perceptual identity to match on). Default radius 8
+    The audio sibling of ``image_phash_pairs``: decode RIFF/WAVE or FLAC
+    on executors, emit only (id, 64-bit gain-invariant time-frequency
+    fingerprint), then the shared pigeonhole banding — recall is exact
+    at the radius, corrupt/non-audio rows are dropped. Default radius 8
     sits inside the measured gap: the same clip across gain 0.6-1.2 /
     dither / PCM-depth + float re-encodes lands at hamming <= 6 while
     distinct clips sit >= 17 (functions/audio_hash.py docstring)."""
-    import pandas as pd
-
-    from ..functions.audio_hash import audio_hash64
-    from ..functions.flac_codec import decode_flac, is_flac
-    from ..functions.image_hash import phash_to_signed
-    from ..functions.wav_codec import decode_wav, is_wav
-
-    def op(batches):
-        for pdf in batches:
-            ids: list[int] = []
-            hs: list[int] = []
-            for r in pdf[[id_col, payload_col]].itertuples(index=False):
-                payload = bytes(r[1]) if r[1] is not None else b""
-                try:
-                    if is_wav(payload):
-                        samples, _rate = decode_wav(payload)
-                    elif is_flac(payload):
-                        # FLAC decodes to the EXACT source samples, so a
-                        # WAV<->FLAC re-containering is a hamming-0 pair
-                        samples, _rate = decode_flac(payload)
-                    else:
-                        continue
-                except ValueError:
-                    continue
-                ids.append(int(r[0]))
-                hs.append(phash_to_signed(audio_hash64(samples)))
-            yield pd.DataFrame(
-                {"_id": pd.array(ids, dtype="int64"), "_sh": pd.array(hs, dtype="int64")}
-            )
-
-    hashed = media.select(
-        F.col(id_col).alias(id_col), F.col(payload_col).alias(payload_col)
-    ).mapInPandas(op, "_id long, _sh long")
-    return hamming_band_pairs(hashed, max_hamming, n_bands)
+    hashed = _payload_hashes(media, id_col, payload_col, _audio_fingerprint)
+    return hamming_band_pairs(hashed.drop("family"), max_hamming, n_bands)
 
 
 def video_phash_pairs(
@@ -359,44 +432,20 @@ def video_phash_pairs(
     Completes the multimodal x dedup triad (image ``image_phash_pairs``,
     audio ``audio_fingerprint_pairs``): real decode of <= ``max_frames``
     evenly-sampled frames ON EXECUTORS — structural MJPEG framing + JPEG
-    decode, or animated-GIF compositing, dispatched per row on magic
-    bytes — per-frame pHash, per-bit majority vote into one 64-bit
+    decode, or animated-GIF/WebP compositing, dispatched per row on
+    magic bytes — per-frame pHash, per-bit majority vote into one 64-bit
     fingerprint (functions/video_hash.py), then the shared pigeonhole
-    banding: payload bytes never shuffle, recall is exact at the radius,
-    and the SAME clip in different containers (MJPEG vs animated GIF)
-    pairs up. Rows with no decodable frame are dropped (no perceptual
-    identity). Default radius 6 sits inside the measured gap: the same
-    clip across MJPEG quality 78-85 / progressive re-encode / trim /
-    reversal / GIF re-containering lands at hamming <= 4 while distinct
-    clips sit >= 18."""
-    import pandas as pd
-
-    from ..functions.image_hash import phash_to_signed
-    from ..functions.video_hash import video_payload_hash64
-
-    def op(batches):
-        for pdf in batches:
-            ids: list[int] = []
-            hs: list[int] = []
-            for r in pdf[[id_col, payload_col]].itertuples(index=False):
-                payload = bytes(r[1]) if r[1] is not None else b""
-                try:
-                    h = video_payload_hash64(payload, max_frames)
-                except (ValueError, NotImplementedError):
-                    # lossy-codec seams (e.g. lossy WebP frames) drop the
-                    # row instead of crashing the task — same contract as
-                    # image_phash_pairs / av_fingerprint_pairs
-                    continue
-                ids.append(int(r[0]))
-                hs.append(phash_to_signed(h))
-            yield pd.DataFrame(
-                {"_id": pd.array(ids, dtype="int64"), "_sh": pd.array(hs, dtype="int64")}
-            )
-
-    hashed = media.select(
-        F.col(id_col).alias(id_col), F.col(payload_col).alias(payload_col)
-    ).mapInPandas(op, "_id long, _sh long")
-    return hamming_band_pairs(hashed, max_hamming, n_bands)
+    banding: recall is exact at the radius, and the SAME clip in
+    different containers (MJPEG vs animated GIF) pairs up. Rows with no
+    decodable frame are dropped (no perceptual identity). Default radius
+    6 sits inside the measured gap: the same clip across MJPEG quality
+    78-85 / progressive re-encode / trim / reversal / GIF
+    re-containering lands at hamming <= 4 while distinct clips sit
+    >= 18."""
+    hashed = _payload_hashes(
+        media, id_col, payload_col, partial(_video_fingerprint, max_frames=max_frames)
+    )
+    return hamming_band_pairs(hashed.drop("family"), max_hamming, n_bands)
 
 
 def av_fingerprint_pairs(
@@ -424,117 +473,17 @@ def av_fingerprint_pairs(
 
     100 TB shape: payload bytes never shuffle (each row emits <= 2
     (id, family, 64-bit hash) tuples), and BOTH families band through
-    ONE self-join keyed by (family, band_no, band_val) with
+    ONE ``hamming_band_pairs`` self-join grouped by ``family`` with
     n_bands = max(radii) + 1 — pigeonhole-sound for the smaller radius
-    too, and the single aliased plan means the demux/decode/hash stage
-    executes once (ReusedExchange), not once per family."""
-    import pandas as pd
-
-    from ..functions.audio_hash import audio_hash64
-    from ..functions.avi_codec import demux_avi, is_avi
-    from ..functions.flac_codec import decode_flac, is_flac
-    from ..functions.image_hash import phash_to_signed
-    from ..functions.mp4_codec import demux_mp4, is_mp4
-    from ..functions.video_hash import video_payload_hash64
-    from ..functions.wav_codec import decode_wav, is_wav
-
-    def op(batches):
-        for pdf in batches:
-            ids: list[int] = []
-            fams: list[str] = []
-            hs: list[int] = []
-            for r in pdf[[id_col, payload_col]].itertuples(index=False):
-                payload = bytes(r[1]) if r[1] is not None else b""
-                emitted: list[tuple[str, int]] = []
-                try:
-                    if is_avi(payload):
-                        vf, samples, _rate = demux_avi(payload)
-                        if vf:
-                            emitted.append(
-                                ("video", video_payload_hash64(b"".join(vf)))
-                            )
-                        if samples.shape[0]:
-                            emitted.append(("audio", audio_hash64(samples)))
-                    elif is_mp4(payload):
-                        # skip_unsupported: an avc1/mp4a track has no
-                        # computable identity, but a sibling jpeg/PCM
-                        # track in the same file still fingerprints
-                        vf, samples, _rate = demux_mp4(payload, skip_unsupported=True)
-                        if vf:
-                            emitted.append(
-                                ("video", video_payload_hash64(b"".join(vf)))
-                            )
-                        if samples.shape[0]:
-                            emitted.append(("audio", audio_hash64(samples)))
-                    elif is_wav(payload):
-                        samples, _rate = decode_wav(payload)
-                        emitted.append(("audio", audio_hash64(samples)))
-                    elif is_flac(payload):
-                        samples, _rate = decode_flac(payload)
-                        emitted.append(("audio", audio_hash64(samples)))
-                    else:
-                        # MJPEG / animated GIF / WebP magic dispatch;
-                        # anything else raises ValueError -> dropped
-                        emitted.append(("video", video_payload_hash64(payload)))
-                except (ValueError, NotImplementedError):
-                    # NotImplementedError too (ADVICE r6 high): demux_avi
-                    # raises it for non-MJPG/non-PCM AVIs (XviD, MP3-in-
-                    # AVI) — the drop/partial-fingerprint contract, like
-                    # image_phash_pairs
-                    continue
-                for fam, h in emitted:
-                    ids.append(int(r[0]))
-                    fams.append(fam)
-                    hs.append(phash_to_signed(h))
-            yield pd.DataFrame(
-                {
-                    "_id": pd.array(ids, dtype="int64"),
-                    "family": pd.array(fams, dtype="string"),
-                    "_sh": pd.array(hs, dtype="int64"),
-                }
-            )
-
-    hashed = media.select(
-        F.col(id_col).alias(id_col), F.col(payload_col).alias(payload_col)
-    ).mapInPandas(op, "_id long, family string, _sh long")
-
-    n_bands = max(audio_hamming, video_hamming) + 1
-    band_structs = band_struct_cols(n_bands - 1, n_bands)
-    # same tiny-exchange materialization as hamming_band_pairs: the demux
-    # + decode + hash stage executes once regardless of join strategy
-    # (explicit count so AQE can't coalesce-then-serialize, see there)
-    n_parts = hashed.sparkSession.sparkContext.defaultParallelism
-    banded = hashed.repartition(n_parts, "_id").select(
-        "_id", "family", "_sh", F.explode(F.array(*band_structs)).alias("band")
-    ).select("_id", "family", "_sh", "band.band_no", "band.band_val")
-    a, b = banded.alias("_a"), banded.alias("_b")
-    cand = (
-        a.join(
-            b,
-            (F.col("_a.family") == F.col("_b.family"))
-            & (F.col("_a.band_no") == F.col("_b.band_no"))
-            & (F.col("_a.band_val") == F.col("_b.band_val"))
-            & (F.col("_a._id") < F.col("_b._id")),
-        )
-        .select(
-            F.col("_a.family").alias("family"),
-            F.col("_a._id").alias("id_a"),
-            F.col("_a._sh").alias("sh_a"),
-            F.col("_b._id").alias("id_b"),
-            F.col("_b._sh").alias("sh_b"),
-        )
-        .dropDuplicates(["family", "id_a", "id_b"])
-    )
+    too — so the demux/decode/hash stage executes once, not once per
+    family; each family then keeps only the pairs within its own
+    radius."""
+    hashed = _payload_hashes(media, id_col, payload_col, _av_fingerprint)
+    pairs = hamming_band_pairs(hashed, max(audio_hamming, video_hamming))
     radius = F.when(F.col("family") == "audio", F.lit(audio_hamming)).otherwise(
         F.lit(video_hamming)
     )
-    return (
-        cand.withColumn(
-            "hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-        )
-        .filter(F.col("hamming") <= radius)
-        .select("family", "id_a", "id_b", "hamming")
-    )
+    return pairs.filter(F.col("hamming") <= radius)
 
 
 def _toks(text_col: str):

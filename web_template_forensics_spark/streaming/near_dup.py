@@ -4,7 +4,7 @@ custom stateful operator.
 ``simhash_pairs_stream`` turns the batch banded self-join
 (operators/dedup.py hamming_band_pairs) into a Structured Streaming
 pipeline: each arriving document is simhashed and exploded into the
-SAME pigeonhole bands as the batch face (shared ``band_struct_cols``),
+SAME pigeonhole bands as the batch face (shared ``_explode_bands``),
 then ``applyInPandasWithState`` keyed by (band_no, band_val) holds the
 (id, hash) members ever seen in that bucket and emits, per new arrival,
 the verified pairs (hamming <= radius) against ALL history plus
@@ -28,6 +28,10 @@ Scale notes (the 100 TB story):
   them after the drain; a fully-streaming consumer chains
   dropDuplicatesWithinWatermark at scale.
 
+Both operators pair each bucket through the one kernel
+``_pair_arrivals``; the unbounded operator runs it with every member at
+event time 0, so its TTL age check never fires.
+
 Reference parity: no streaming surface exists in the reference (a
 single-process Flask tool); this is SURVEY.md §2.9 graft surface.
 """
@@ -36,6 +40,51 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+_MASK64 = 0xFFFFFFFFFFFFFFFF
+
+
+def _arrivals(pdfs, cols: tuple[str, ...]) -> list[tuple[int, ...]]:
+    """The int64 ``cols`` of every row in one group's Arrow batches."""
+    return [
+        tuple(int(v) for v in row)
+        for pdf in pdfs
+        for row in zip(*(pdf[c].astype("int64") for c in cols))
+    ]
+
+
+def _pair_arrivals(
+    members: list[tuple[int, int, int]],
+    fresh: list[tuple[int, int, int]],
+    max_hamming: int,
+    ttl_ms: int,
+) -> list[tuple[int, int, int, int]]:
+    """Pair one band bucket's new (id, hash, ts_ms) arrivals -> (id_a,
+    id_b, hamming, arrival ts_ms) rows, id_a < id_b.
+
+    Each arrival pairs against every earlier member (history, then the
+    earlier arrivals of this batch) whose event time is within
+    ``ttl_ms`` of its own and whose hash is within ``max_hamming``, and
+    is then appended to ``members`` in place. Arrivals go in id order,
+    so the output does not depend on Arrow batch boundaries. An arrival
+    whose id is already a member is a replay (source duplicate delivery
+    / restart overlap): its pairs were already emitted, and re-appending
+    would grow state and duplicate emissions, so it is skipped."""
+    known = {m[0] for m in members}
+    rows: list[tuple[int, int, int, int]] = []
+    for i, h, t in sorted(fresh):
+        if i in known:
+            continue
+        for j, g, u in members:
+            if abs(t - u) > ttl_ms:
+                continue
+            d = bin((h ^ g) & _MASK64).count("1")
+            if d <= max_hamming:
+                a, b = (i, j) if i < j else (j, i)
+                rows.append((a, b, d, t))
+        members.append((i, h, t))
+        known.add(i)
+    return rows
 
 
 def simhash_pairs_stream(
@@ -60,16 +109,12 @@ def simhash_pairs_stream(
     )
 
     from ..functions.text_udfs import simhash64_udf
-    from ..operators.dedup import band_struct_cols
+    from ..operators.dedup import _explode_bands
 
     sh = docs_stream.select(
         F.col(id_col).alias("_id"), simhash64_udf(F.col(text_col)).alias("_sh")
     )
-    banded = sh.select(
-        "_id",
-        "_sh",
-        F.explode(F.array(*band_struct_cols(max_hamming, n_bands))).alias("band"),
-    ).select("_id", "_sh", "band.band_no", "band.band_val")
+    banded = _explode_bands(sh, max_hamming, n_bands)
 
     out_schema = StructType(
         [
@@ -86,41 +131,16 @@ def simhash_pairs_stream(
     )
 
     def fn(key, pdfs, state):
-        members: list[tuple[int, int]] = []
-        if state.exists:
-            ids, hs = state.get
-            members = [(int(i), int(h)) for i, h in zip(ids, hs)]
+        # unbounded retention: every member sits at event time 0, so the
+        # kernel's age check never drops a pair
+        members = [(int(i), int(h), 0) for i, h in zip(*state.get)] if state.exists else []
         n_old = len(members)
-        fresh: list[tuple[int, int]] = []
-        for pdf in pdfs:
-            for i, h in zip(
-                pdf["_id"].astype("int64"), pdf["_sh"].astype("int64")
-            ):
-                fresh.append((int(i), int(h)))
-        # deterministic emit independent of Arrow batch boundaries:
-        # process new members in id order
-        fresh.sort()
-        known = {m[0] for m in members}
-        rows: list[tuple[int, int, int]] = []
-        for i, h in fresh:
-            if i in known:
-                # replay of a known member (source duplicate delivery /
-                # restart overlap): its pairs were already emitted, and
-                # re-appending would grow state and duplicate emissions
-                continue
-            for j, g in members:
-                d = bin((h ^ g) & 0xFFFFFFFFFFFFFFFF).count("1")
-                if d <= max_hamming:
-                    a, b = (i, j) if i < j else (j, i)
-                    rows.append((a, b, d))
-            members.append((i, h))
-            known.add(i)
+        fresh = [(i, h, 0) for i, h in _arrivals(pdfs, ("_id", "_sh"))]
+        rows = _pair_arrivals(members, fresh, max_hamming, 0)
         if len(members) > n_old:
-            state.update(
-                ([m[0] for m in members], [m[1] for m in members])
-            )
+            state.update(([m[0] for m in members], [m[1] for m in members]))
         if rows:
-            yield pd.DataFrame(rows, columns=["id_a", "id_b", "hamming"])
+            yield pd.DataFrame([r[:3] for r in rows], columns=["id_a", "id_b", "hamming"])
 
     return banded.groupBy("band_no", "band_val").applyInPandasWithState(
         fn,
@@ -186,7 +206,7 @@ def simhash_pairs_stream_ttl(
     )
 
     from ..functions.text_udfs import simhash64_udf
-    from ..operators.dedup import band_struct_cols
+    from ..operators.dedup import _explode_bands
 
     ttl_ms = int(ttl_seconds) * 1000
     sh = docs_stream.withWatermark(ts_col, watermark_delay).select(
@@ -195,13 +215,7 @@ def simhash_pairs_stream_ttl(
         F.col(ts_col).alias("_ts"),
         F.unix_millis(F.col(ts_col)).alias("_tms"),
     )
-    banded = sh.select(
-        "_id",
-        "_sh",
-        "_ts",
-        "_tms",
-        F.explode(F.array(*band_struct_cols(max_hamming, n_bands))).alias("band"),
-    ).select("_id", "_sh", "_ts", "_tms", "band.band_no", "band.band_val")
+    banded = _explode_bands(sh, max_hamming, n_bands)
 
     out_schema = StructType(
         [
@@ -223,41 +237,17 @@ def simhash_pairs_stream_ttl(
         if state.hasTimedOut:
             state.remove()
             return
-        members: list[tuple[int, int, int]] = []
-        if state.exists:
-            ids, hs, tms = state.get
-            members = [
-                (int(i), int(h), int(t)) for i, h, t in zip(ids, hs, tms)
-            ]
+        members = (
+            [(int(i), int(h), int(t)) for i, h, t in zip(*state.get)] if state.exists else []
+        )
         wm = state.getCurrentWatermarkMs()
         # prune: a member older than watermark - ttl can never satisfy
         # the |ts diff| <= ttl emit filter against an in-watermark
         # arrival — eviction bounds state without touching the answer
         members = [m for m in members if m[2] >= wm - ttl_ms]
         n_before = len(members)
-        fresh: list[tuple[int, int, int]] = []
-        for pdf in pdfs:
-            for i, h, t in zip(
-                pdf["_id"].astype("int64"),
-                pdf["_sh"].astype("int64"),
-                pdf["_tms"].astype("int64"),
-            ):
-                fresh.append((int(i), int(h), int(t)))
-        fresh.sort()  # deterministic emit independent of Arrow batching
-        known = {m[0] for m in members}
-        rows: list[tuple[int, int, int, int]] = []
-        for i, h, t in fresh:
-            if i in known:
-                continue  # replay of a known member (same rule as base)
-            for j, g, u in members:
-                if abs(t - u) > ttl_ms:
-                    continue
-                d = bin((h ^ g) & 0xFFFFFFFFFFFFFFFF).count("1")
-                if d <= max_hamming:
-                    a, b = (i, j) if i < j else (j, i)
-                    rows.append((a, b, d, t))
-            members.append((i, h, t))
-            known.add(i)
+        fresh = _arrivals(pdfs, ("_id", "_sh", "_tms"))
+        rows = _pair_arrivals(members, fresh, max_hamming, ttl_ms)
         if not members:
             if state.exists:
                 state.remove()
@@ -276,14 +266,9 @@ def simhash_pairs_stream_ttl(
                 max(wm + 1, max(m[2] for m in members) + ttl_ms + 1)
             )
         if rows:
-            yield pd.DataFrame(
-                {
-                    "id_a": [r[0] for r in rows],
-                    "id_b": [r[1] for r in rows],
-                    "hamming": [r[2] for r in rows],
-                    "ts": pd.to_datetime([r[3] for r in rows], unit="ms"),
-                }
-            )
+            out = pd.DataFrame(rows, columns=["id_a", "id_b", "hamming", "ts"])
+            out["ts"] = pd.to_datetime(out["ts"], unit="ms")
+            yield out
 
     pairs = banded.groupBy("band_no", "band_val").applyInPandasWithState(
         fn,
