@@ -1,7 +1,13 @@
 """Oracle parity tests: reference parse semantics (tests/html_analyzer_test.py
 ports) + extraction edge cases + structure-compare score fixtures."""
 
+import hashlib
+
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from web_template_forensics_spark.oracle.html_oracle import (
+    _tree_path_extract,
     extract_text,
     parse_html_tree,
 )
@@ -233,19 +239,10 @@ _R7_EDGE_DOCS = [
     "<body>tail trailing <b>bold",                # EOF inside elements
     "&#x48;&#x49; bare refs no tags",
     "<body> nbsp kept </body>",         # unicode strip semantics
+    "<body>a</body><body>b</body><body>c",        # repeated bodies
+    "<body/><body>x</body>",
+    '<body class="a"><div><body>inner</body>tail</div></body> out',
 ]
-
-
-def _tree_path_extract(html: str) -> str:
-    from web_template_forensics_spark.oracle.html_oracle import (
-        _collect_text,
-        parse_html_tree,
-    )
-
-    tree = parse_html_tree(html, keep_meta_flag=False)
-    out: list[str] = []
-    _collect_text(tree, out, False)
-    return "\n".join(out)
 
 
 def test_fast_extract_matches_tree_path_on_edges():
@@ -270,7 +267,12 @@ def test_updatepos_noop_is_event_neutral():
     (skips lineno/offset newline counting, ~9% of extract_text). Positions
     never influence tokenization, so the event stream — and therefore the
     extraction AND the tree — must be identical with the stdlib version
-    restored. Pin that over every edge doc and a generated rich corpus."""
+    restored. The text builder's slow twin also restores the stdlib token
+    loop, so its fast goahead is compared directly against stdlib on the
+    same builder. Pin that over every edge doc and a generated rich
+    corpus."""
+    import html.parser
+
     import _markupbase
 
     from web_template_forensics_spark.oracle import html_oracle as ho
@@ -278,6 +280,7 @@ def test_updatepos_noop_is_event_neutral():
 
     class _SlowText(ho._TextOnlyBuilder):
         updatepos = _markupbase.ParserBase.updatepos
+        goahead = html.parser.HTMLParser.goahead
 
     class _SlowTree(ho._RawTreeBuilder):
         updatepos = _markupbase.ParserBase.updatepos
@@ -300,3 +303,87 @@ def test_updatepos_noop_is_event_neutral():
     for doc in docs:
         assert ho.extract_text(doc) == slow_extract(doc), doc[:60]
         assert ho.parse_raw(doc).document == slow_tree(doc), doc[:60]
+
+
+def test_generated_page_text_pinned():
+    """The golden ``text`` column comes from the tree path; pin its bytes
+    so the switch of generator path (or any oracle drift) cannot silently
+    change the shipped pages corpus."""
+    from web_template_forensics_spark.sources.pages import gen_pages_pdf
+
+    pdf = gen_pages_pdf(0, 300, seed=7, rich=8)
+    digest = hashlib.sha256("\x00".join(pdf["text"]).encode()).hexdigest()
+    assert digest == "b13d61e4d2dcea91d0d0f8ebd4a1c2734fa14c69edc94ad6d530561748df3798"
+
+
+# ---- differential fuzz: fast token loop vs the stdlib loop --------------
+
+_FUZZ_TOKENS = [
+    # data runs, charrefs, odd whitespace and NUL
+    "text", " ", "\n", "\t", "\xa0", "\x00", "a &amp; b", "&lt;x&gt;", "&#65;",
+    "&#x42;", "&nbsp;", "&", "&#", "&amp", "&#1",
+    # shapes the fast token consumes
+    "<p>", "</p>", "<div>", "</div>", "<b>", "</b>", "<h1>", "</h1>", "<li>",
+    "</li>", '<p id="a">', '<a href="/x" class="y z">', "</a>", "<br>",
+    '<img src="i.png" alt="">', '<p id="a>b">', "<body>", "</body>", "<html>",
+    "</html>", "<head>", "</head>", "<title>", "</title>", "<script>",
+    "</script>", "<style>", "</style>", "var a = '<div>' < 1;", "p > a {}",
+    # shapes that fall back to the stdlib methods
+    "<P>", "</P>", "<DIV class=x>", "<BODY>", "<Body>", "</Body>", "<Br>",
+    "<SCRIPT>", "<Script>", "<Style>", "</SCRIPT >",
+    "</script >", "</style\n>", "<a href=x>", "<a href='x'>", '<a href = "x">',
+    "<a b = 'c' >", "<b\xa0x>", "<b\vx>", '<body\xa0a="1">', '<script\vx="1">',
+    '<p\nid="a">', "<br/>", "<p/>", "<body/>", "< p>",
+    "</ p>", "</>", "</h1\n>", "<p >", '<p a="1"b="2">', "<input disabled>",
+    '<p data-x="1" data-x="2">', "<p a=\"&amp;\">", "<a_b>", "</a_b>",
+    "<!-- c -->", "<!---->", "<!--", "-->", "<!DOCTYPE html>", "<?php x ?>",
+    "<![CDATA[x]]>", "<!x>", "<", "</", "<a", "<a b=", ">",
+]
+
+_fuzz_docs = st.builds(
+    "".join,
+    st.lists(st.sampled_from(_FUZZ_TOKENS), max_size=40),
+).flatmap(
+    # EOF tails: unterminated constructs and a bare '&'/'&#' within the
+    # last 34 characters, where stdlib's charref-cut rule applies
+    lambda body: st.sampled_from(["", "&", "&#", "&#x", " &amp", "<", "<!--", "<a b="]).map(
+        lambda tail: body + tail
+    )
+)
+
+
+@settings(derandomize=True, max_examples=2000, deadline=None, database=None)
+@given(_fuzz_docs)
+def test_fast_extract_matches_tree_path_fuzz(doc):
+    assert extract_text(doc) == _tree_path_extract(doc)
+
+
+def test_stdlib_tokenizer_unchanged():
+    """``_TextOnlyBuilder.goahead`` copies stdlib ``HTMLParser.goahead``
+    and its fast token is argued exact against these stdlib rules. An
+    interpreter upgrade that changes any of them must fail here, not
+    silently change the extraction."""
+    import html.parser as hp
+    import inspect
+
+    parts = [
+        inspect.getsource(getattr(hp.HTMLParser, name))
+        for name in ("goahead", "parse_starttag", "parse_endtag", "check_for_whole_start_tag")
+    ]
+    parts += [
+        getattr(hp, name).pattern
+        for name in (
+            "starttagopen",
+            "locatestarttagend_tolerant",
+            "tagfind_tolerant",
+            "attrfind_tolerant",
+            "endendtag",
+            "endtagfind",
+        )
+    ]
+    digest = hashlib.sha256("\x00".join(parts).encode()).hexdigest()
+    assert digest == "064b4bdc9ad63f930f4423aecb8f726541534ca9875a501aba437330c65dbec5", (
+        "stdlib html.parser's token loop or tag regexes changed: re-check "
+        "_TextOnlyBuilder.goahead (its copied loop and the _FAST_TOKEN "
+        "exactness argument) against the new stdlib, then update this hash"
+    )

@@ -5,7 +5,9 @@ Every UDF here is the distributed face of a pure function in
 between the two on the golden pages corpus. The parse itself is complex
 scalar work (the reference's P1 operator, core/html_parser.py:41-138), so
 a pandas UDF is the right Spark shape: one Python<->JVM crossing per Arrow
-batch, parse loop in C-accelerated stdlib html.parser.
+batch. The parse loop itself is pure Python (stdlib ``html.parser``);
+``extract_text`` runs its text-only builder, whose token loop consumes the
+common tag shapes with one compiled regex per token.
 """
 
 from __future__ import annotations

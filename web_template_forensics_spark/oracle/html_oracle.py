@@ -45,7 +45,10 @@ pseudo-text — NOT part of the fidelity oracle, just the useful variant.
 from __future__ import annotations
 
 import json
+import re
+from html import unescape
 from html.parser import HTMLParser as _StdHTMLParser
+from html.parser import starttagopen as _STARTTAGOPEN
 from typing import Any
 
 # bs4 HTMLTreeBuilder.empty_element_tags: HTML void elements plus the
@@ -278,12 +281,40 @@ def _collect_text(node: dict[str, Any], out: list[str], clean: bool) -> None:
         _collect_text(child, out, clean)
 
 
+def _tree_path_extract(html_content: str, clean: bool = False) -> str:
+    """Extracted text walked off :func:`parse_html_tree` -- the stdlib-loop
+    reference that ``_TextOnlyBuilder`` is pinned against (and the
+    ``clean=True`` path of :func:`extract_text`)."""
+    tree = parse_html_tree(html_content, keep_meta_flag=clean)
+    out: list[str] = []
+    _collect_text(tree, out, clean)
+    return "\n".join(out)
+
+
+# PCDATA-mode fast token: a data run, then either a lowercase start tag
+# whose attributes are all ` name="value"`, or a lowercase `</name>`.
+_FAST_TOKEN = re.compile(
+    r'([^<]*+)<(?:([a-z][a-z0-9]*)(?: [a-z][a-z0-9-]*="[^"]*")*>|/([a-z][a-z0-9]*)>)'
+)
+_AMP_TAIL_END = re.compile(r"[\s;]")
+
+
 class _TextOnlyBuilder(_StdHTMLParser):
-    """Round-7 fast path for :func:`extract_text` (clean=False): consumes
-    the SAME stdlib event stream as ``_RawTreeBuilder`` but collects only
-    text, skipping node dicts, attribute processing and the
-    ``_to_reference_node`` pass (~20% of extract_text's profile — the
-    tokenizer itself is the other ~80% and is shared verbatim).
+    """Fast path for :func:`extract_text` (clean=False): consumes the SAME
+    event stream as ``_RawTreeBuilder`` but collects only text, skipping
+    node dicts, attribute processing and the ``_to_reference_node`` pass.
+
+    Its token loop (:meth:`goahead`) is stdlib ``HTMLParser.goahead`` for
+    ``convert_charrefs=True`` with one fast path: in PCDATA mode it first
+    tries ``_FAST_TOKEN``, which consumes a data run plus a plain
+    lowercase start tag (attributes only ``name="value"``) or ``</name>``
+    in one regex call. On exactly those strings stdlib's
+    ``parse_starttag``/``parse_endtag`` end at the same ``>`` with the
+    same (already lowercase) name, and attribute values are never read
+    here, so the events are unchanged. Anything else -- other tag shapes,
+    CDATA mode, comments, PIs, declarations, unterminated constructs and
+    the EOF/``&``-tail rules -- falls back to the unmodified stdlib
+    methods. The tree builders keep the stdlib loop as the reference.
 
     Faithfulness to the tree path, rule by rule:
       * data runs are coalesced between flush points and pseudo-text
@@ -299,7 +330,8 @@ class _TextOnlyBuilder(_StdHTMLParser):
         its close, or under a later body-after-close is excluded, and
         ``<body/>`` yields an empty extraction) — matching
         ``parse_html_tree``'s root selection.
-    Pinned bytewise against the tree path in tests/test_html_oracle.py.
+    Pinned bytewise against the tree path and the stdlib loop in
+    tests/test_html_oracle.py (edge docs, generated pages, a seeded fuzz).
     """
 
     def __init__(self) -> None:
@@ -312,6 +344,87 @@ class _TextOnlyBuilder(_StdHTMLParser):
         self.body_seen = False
 
     updatepos = _RawTreeBuilder.updatepos  # same argument: positions unread
+
+    def goahead(self, end: int) -> None:
+        # stdlib HTMLParser.goahead with convert_charrefs=True, plus the
+        # _FAST_TOKEN path; updatepos calls are dropped (positions unread).
+        rawdata = self.rawdata
+        i = 0
+        n = len(rawdata)
+        fast = _FAST_TOKEN.match
+        while i < n:
+            if not self.cdata_elem:
+                m = fast(rawdata, i)
+                if m is not None:
+                    run, tag, endtag = m.groups()
+                    if run:
+                        self._data.append(unescape(run))
+                    if endtag is None:
+                        self.handle_starttag(tag, None)
+                        if tag in self.CDATA_CONTENT_ELEMENTS:
+                            self.set_cdata_mode(tag)
+                    else:
+                        self.handle_endtag(endtag)
+                    i = m.end()
+                    continue
+                j = rawdata.find("<", i)
+                if j < 0:
+                    # a charref may be cut at the end of a partial feed
+                    amppos = rawdata.rfind("&", max(i, n - 34))
+                    if amppos >= 0 and not _AMP_TAIL_END.search(rawdata, amppos):
+                        break
+                    j = n
+            else:
+                match = self.interesting.search(rawdata, i)
+                if not match:
+                    break  # CDATA content waits for its end tag
+                j = match.start()
+            if i < j:
+                if self.cdata_elem:
+                    self.handle_data(rawdata[i:j])
+                else:
+                    self.handle_data(unescape(rawdata[i:j]))
+            i = j
+            if i == n:
+                break
+            startswith = rawdata.startswith
+            # charrefs are converted inside data runs, so every token
+            # starts at '<' (stdlib's '&'/'&#' branches are unreachable)
+            assert startswith("<", i), "convert_charrefs token not at '<'"
+            if _STARTTAGOPEN.match(rawdata, i):
+                k = self.parse_starttag(i)
+            elif startswith("</", i):
+                k = self.parse_endtag(i)
+            elif startswith("<!--", i):
+                k = self.parse_comment(i)
+            elif startswith("<?", i):
+                k = self.parse_pi(i)
+            elif startswith("<!", i):
+                k = self.parse_html_declaration(i)
+            elif i + 1 < n:
+                self.handle_data("<")
+                k = i + 1
+            else:
+                break
+            if k < 0:
+                if not end:
+                    break
+                k = rawdata.find(">", i + 1)
+                if k < 0:
+                    k = rawdata.find("<", i + 1)
+                    if k < 0:
+                        k = i + 1
+                else:
+                    k += 1
+                if self.cdata_elem:
+                    self.handle_data(rawdata[i:k])
+                else:
+                    self.handle_data(unescape(rawdata[i:k]))
+            i = k
+        if end and i < n and not self.cdata_elem:
+            self.handle_data(unescape(rawdata[i:n]))
+            i = n
+        self.rawdata = rawdata[i:]
 
     def _flush(self) -> None:
         if self._data:
@@ -410,10 +523,7 @@ def extract_text(html_content: str, clean: bool = False) -> str:
         builder = _TextOnlyBuilder()
         builder.feed(html_content)
         return builder.extracted()
-    tree = parse_html_tree(html_content, keep_meta_flag=clean)
-    out: list[str] = []
-    _collect_text(tree, out, clean)
-    return "\n".join(out)
+    return _tree_path_extract(html_content, clean=True)
 
 
 def tree_stats(node: dict[str, Any]) -> tuple[int, int, dict[str, int]]:

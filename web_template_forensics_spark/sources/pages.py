@@ -4,8 +4,10 @@ Schema per BASELINE.json ``input_hint``:
     url:string, warc_ts:timestamp, html:binary, text:string, lang:string
 
 ``text`` is the golden extracted text computed AT GENERATION TIME by the
-pure-Python oracle (:mod:`..oracle.html_oracle`) — the engine's pandas-UDF
-extraction must reproduce it byte-identically per url.
+pure-Python oracle's tree path (:mod:`..oracle.html_oracle`, stdlib token
+loop) — the engine's pandas-UDF extraction, which runs the fast text-only
+token loop, must reproduce it byte-identically per url, so every
+``verify_text`` run cross-checks the two loops.
 
 Design constraints honored here:
   * fully seeded — every row is a pure function of (seed, row_index) via a
@@ -35,7 +37,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 
-from ..oracle.html_oracle import extract_text
+from ..oracle.html_oracle import _tree_path_extract
 
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
@@ -226,7 +228,7 @@ def gen_pages_pdf(
             "url": url,
             "warc_ts": pd.Timestamp(ts),
             "html": html.encode("utf-8"),
-            "text": extract_text(html),
+            "text": _tree_path_extract(html),
             "lang": lang,
         }
         if with_gold:
