@@ -8,13 +8,16 @@ from pyspark.sql import functions as F
 
 
 def test_pipeline_invariant_and_geocode(spark):
-    from web_template_forensics_spark.plans.pipeline import pages_to_geo
+    from web_template_forensics_spark.plans.pipeline import pages_to_geo_fused
     from web_template_forensics_spark.sources.pages import build_pages_df, gen_pages_pdf
 
     n = 400
     pages = build_pages_df(spark, n, seed=42)
-    geo = pages_to_geo(spark, pages, verify_text=True)  # raises on any byte mismatch
-    got = geo.select("url", "lat", "lon").toPandas().set_index("url")
+    geo = pages_to_geo_fused(pages, verify_text=True)
+    got = geo.select("url", "lat", "lon", "text_ok").toPandas()
+    # the extracted text is byte-identical to the stored golden text
+    assert (got.text_ok == 1).all()
+    got = got.set_index("url")
 
     gold = gen_pages_pdf(0, n, 42, with_gold=True)
     # duplicate urls: keep any row (same url -> same html -> same geocode)
@@ -23,6 +26,52 @@ def test_pipeline_invariant_and_geocode(spark):
     joined = got.join(gold[["gold_lat", "gold_lon"]])
     assert (joined.lat == joined.gold_lat).all()
     assert (joined.lon == joined.gold_lon).all()
+
+
+def test_ungeocoded_pages_and_head_scoped_meta(spark):
+    """A foreign host and an unknown TLD geocode to null lat/lon (and are
+    counted as ungeocoded); a geo meta tag outside <head> is ignored, so
+    that page keeps its TLD-anchor geocode."""
+    import re
+
+    from web_template_forensics_spark.plans.pipeline import (
+        pages_to_geo_fused,
+        run_pages_pipeline,
+    )
+    from web_template_forensics_spark.sources.pages import (
+        PAGES_SCHEMA,
+        gen_pages_pdf,
+        geocode_host,
+    )
+
+    pdf = gen_pages_pdf(0, 40, 42, with_gold=True)
+    unique = pdf.groupby("url").url.transform("size") == 1
+    has_meta = pdf.html.map(lambda b: b"geo.position" in b)
+    plain = pdf.index[unique & ~has_meta]
+    foreign, unknown_tld = plain[0], plain[1]
+    moved = pdf.index[unique & has_meta][0]
+
+    pdf.loc[foreign, "url"] = "https://example.org/x"
+    pdf.loc[unknown_tld, "url"] = f"https://h{pdf.gold_host_id[unknown_tld]}.example.zz/p/1"
+    html = pdf.html[moved].decode("utf-8")
+    tag = re.search(r'<meta name="geo\.position"[^>]*>', html).group(0)
+    html = html.replace(tag, "").replace("</head>", "</head>" + tag, 1)
+    assert html.index(tag) > html.index("</head>")
+    pdf.at[moved, "html"] = html.encode("utf-8")
+
+    pages = spark.createDataFrame(pdf[["url", "warc_ts", "html", "text", "lang"]], PAGES_SCHEMA)
+    got = pages_to_geo_fused(pages).select("url", "lat", "lon").toPandas().set_index("url")
+    for i in (foreign, unknown_tld):
+        row = got.loc[pdf.url[i]]
+        assert row.isna().all(), (pdf.url[i], row.tolist())
+    want = geocode_host(int(pdf.gold_host_id[moved]), pdf.gold_tld[moved])
+    assert want != (pdf.gold_lat[moved], pdf.gold_lon[moved])  # not the meta coords
+    assert tuple(got.loc[pdf.url[moved]]) == want
+    assert got.drop(index=[pdf.url[foreign], pdf.url[unknown_tld]]).notna().all().all()
+
+    stats = run_pages_pipeline(spark, pages=pages)
+    assert stats["pages"] == 40
+    assert stats["ungeocoded"] == 2
 
 
 def test_checkpointed_write_resume(spark, tmp_path):

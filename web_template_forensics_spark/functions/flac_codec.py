@@ -25,8 +25,6 @@ declared totals, sample-count bomb guard.
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
 _MAX_SAMPLES = 1 << 28  # bomb guard (~256M samples)
@@ -264,14 +262,6 @@ def _utf8_write(bw: _BitWriter, v: int) -> None:
     for k in range(n - 1, -1, -1):
         bw.write(0x80 | ((v >> (6 * k)) & 0x3F), 8)
 
-
-_FIXED_COEFS = {
-    0: [],
-    1: [1],
-    2: [2, -1],
-    3: [3, -3, 1],
-    4: [4, -6, 4, -1],
-}
 
 _BLOCKSIZES = {
     1: 192, 2: 576, 3: 1152, 4: 2304, 5: 4608,

@@ -1,12 +1,12 @@
-"""Geo column functions: numpy-vectorized pandas UDFs over the WGQ spec
-plus pure-SQL Column builders for the oracle-checkable paths.
+"""Geo column functions over the WGQ spec.
 
 Two faces for the same math:
-  * ``*_udf``   — Arrow-batched numpy (zero per-row Python), for the
-    pipeline hot path.
-  * ``*_col``   — pure Spark SQL Column expressions (floor/bit ops only),
-    letting Catalyst codegen the whole stage JVM-side AND letting the
-    DuckDB oracle recompute identical values from the same ANSI SQL.
+  * ``cell_encode_udf`` — Arrow-batched numpy (zero per-row Python), the
+    cell key of ``knn_join`` and of the doc_cells / cell_hierarchy queries.
+  * ``*_col`` / ``*_sql`` — pure Spark SQL Column expressions (floor/bit
+    ops only) and the same arithmetic as ANSI SQL strings, letting
+    Catalyst codegen the whole stage JVM-side AND letting the DuckDB
+    oracle recompute identical values.
 Both are tested to agree exactly with :mod:`..geo.cells`.
 """
 
@@ -26,49 +26,6 @@ def cell_encode_udf(level: int):
         return pd.Series(cells.cell_encode(lat.to_numpy(), lon.to_numpy(), level))
 
     return _enc
-
-
-def tile_x_udf(z: int):
-    @F.pandas_udf(T.LongType())
-    def _tx(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        ix, _ = cells.tile_of(lat.to_numpy(), lon.to_numpy(), z)
-        return pd.Series(ix)
-
-    return _tx
-
-
-def tile_y_udf(z: int):
-    @F.pandas_udf(T.LongType())
-    def _ty(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        _, iy = cells.tile_of(lat.to_numpy(), lon.to_numpy(), z)
-        return pd.Series(iy)
-
-    return _ty
-
-
-def cell_center_lat_udf():
-    @F.pandas_udf(T.DoubleType())
-    def _clat(cell: pd.Series) -> pd.Series:
-        lat, _ = cells.cell_center(cell.to_numpy())
-        return pd.Series(lat)
-
-    return _clat
-
-
-def cell_center_lon_udf():
-    @F.pandas_udf(T.DoubleType())
-    def _clon(cell: pd.Series) -> pd.Series:
-        _, lon = cells.cell_center(cell.to_numpy())
-        return pd.Series(lon)
-
-    return _clon
-
-
-@F.pandas_udf(T.DoubleType())
-def haversine_udf(lat1: pd.Series, lon1: pd.Series, lat2: pd.Series, lon2: pd.Series) -> pd.Series:
-    return pd.Series(
-        cells.haversine_m(lat1.to_numpy(), lon1.to_numpy(), lat2.to_numpy(), lon2.to_numpy())
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -127,9 +84,3 @@ def morton_sql(ix_expr: str, iy_expr: str, level: int) -> str:
         terms.append(f"((({ix_expr}) >> {b}) % 2) * {1 << (2 * b)}")
         terms.append(f"((({iy_expr}) >> {b}) % 2) * {1 << (2 * b + 1)}")
     return "(" + " + ".join(terms) + ")"
-
-
-def cell_id_sql(lat_expr: str, lon_expr: str, level: int) -> str:
-    ix = tile_ix_sql(lon_expr, level)
-    iy = tile_iy_sql(lat_expr, level)
-    return f"({level} * {1 << 52} + {morton_sql(ix, iy, level)})"

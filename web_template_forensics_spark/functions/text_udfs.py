@@ -484,21 +484,6 @@ def bpe_token_count_udf(text: pd.Series) -> pd.Series:
     return text.fillna("").str.count(BPE_TOKEN_PATTERN).astype("int64")
 
 
-@F.pandas_udf(T.StringType())
-def lang_id_udf(text: pd.Series) -> pd.Series:
-    langs = sorted(LANG_MARKERS)
-    padded = " " + text.fillna("") + " "
-    scores = pd.DataFrame(
-        {
-            lg: sum(padded.str.count(f" {tok} ") for tok in LANG_MARKERS[lg])
-            for lg in langs
-        }
-    )
-    best = scores.max(axis=1)
-    winner = scores.idxmax(axis=1)  # first (alphabetical) on ties
-    return winner.where(best > 0, "und")
-
-
 @F.pandas_udf(T.DoubleType())
 def quality_score_udf(text: pd.Series) -> pd.Series:
     s = text.fillna("")

@@ -600,9 +600,6 @@ def _inv_color_indexing(
     return palette[full.reshape(-1)]
 
 
-_PRED_MODES = 14
-
-
 def _inv_predictor(
     px: np.ndarray, modes: np.ndarray, bits: int, width: int, height: int
 ) -> None:

@@ -1,14 +1,1 @@
-from .cells import (  # noqa: F401
-    MAX_LEVEL,
-    cell_bounds,
-    cell_center,
-    cell_children,
-    cell_decode,
-    cell_encode,
-    cell_ij,
-    cell_parent,
-    cell_to_tile,
-    haversine_m,
-    k_ring,
-    tile_of,
-)
+"""Hierarchical cell index (WGQ spec) and the polygon model, pure numpy."""

@@ -14,8 +14,8 @@ Quirk fidelity (Q9-Q14, documented in oracle/cascade_oracle.py): the
 reference's html/jsx/js structure stages can never match, jsx pairwise
 similarity is constant 1.0, next-env.d.ts is dropped from js unmatched
 lists only. The capable (non-quirk) structure matching remains available
-as the generic operators in operators/matching.py + the signature
-prefilters in functions/html_udfs.py.
+as the generic operators in operators/matching.py + the tree-size
+prefilter ``structure_size_udf`` in functions/similarity_udfs.py.
 
 Rounding fidelity: everywhere the reference applies Python ``round``
 (half-even) the plan calls a tiny pandas round UDF instead of ``F.round``

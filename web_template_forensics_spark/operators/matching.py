@@ -1,9 +1,10 @@
 """The reference's matching cascade as dataflow operators.
 
-J1 exact equi-join + anti remainders (core/file_matcher.py:46-58) and the
-greedy 1:1 best-unused similarity assignment that underlies its fuzzy /
-structure / contextual / content joins (core/file_matcher.py:61-82,
-186-323, 325-360, 374-395).
+The greedy 1:1 best-unused similarity assignment that underlies the
+reference's fuzzy / structure / contextual / content joins
+(core/file_matcher.py:61-82, 186-323, 325-360, 374-395), plus their
+candidate scorers. The J1 exact join and its anti remainders are plain
+inline ``left_anti`` joins at their call sites (operators/cascade.py).
 
 The greedy pass is inherently sequential *within a comparison group*
 (later picks depend on earlier ones — SURVEY.md §4.3), so it runs as a
@@ -25,16 +26,6 @@ from pyspark.sql import functions as F
 
 _log = logging.getLogger(__name__)
 _warned_banded = False
-
-
-def exact_match(
-    left: DataFrame, right: DataFrame, key: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """J1: (matches, unmatched_left, unmatched_right)."""
-    matches = left.join(right.select(key).distinct(), key, "inner")
-    un_l = left.join(right, key, "left_anti")
-    un_r = right.join(left, key, "left_anti")
-    return matches, un_l, un_r
 
 
 def greedy_similarity_match(

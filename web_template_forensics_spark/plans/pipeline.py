@@ -1,7 +1,7 @@
 """The end-to-end pages pipeline (the spark-submit job body).
 
 pages -> extract_text (oracle-verified) -> geocode (meta > TLD anchor) ->
-WGQ cell encode -> broadcast PIP join -> salted tile rollup -> sinks.
+cell-keyed broadcast PIP join -> salted tile rollup -> sinks.
 This is the E1-analog lifecycle of SURVEY.md §3 re-expressed as one
 DataFrame lineage; `jobs/run_pipeline.py` wraps it for spark-submit, and
 `checkpointed_write` gives the per-partition lineage + resume the north
@@ -10,18 +10,32 @@ rule requires.
 
 from __future__ import annotations
 
+import re
+
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.geo_udfs import cell_encode_udf
-from ..functions.html_udfs import extract_text_udf
 from ..geo.polygons import Polygon
 from ..operators.spatial_join import pip_join
 from ..operators.tiles import tile_rollup
-from ..sources.pages import build_pages_df, geocode_pages
+from ..sources.pages import build_pages_df
 
-CELL_LEVEL = 12
 TILE_Z = 5
+
+# Geo metadata: <meta name="geo.position" content="LAT;LON"> (+ ICBM).
+_GEO_POS_RE = re.compile(
+    r"<meta\s+name=[\"'](?:geo\.position|ICBM)[\"']\s+content=[\"']\s*"
+    r"(-?\d+(?:\.\d+)?)\s*[;,]\s*(-?\d+(?:\.\d+)?)\s*[\"']",
+    re.IGNORECASE,
+)
+
+
+def head_slice(s: pd.Series) -> pd.Series:
+    """Markup slice for <head>-scoped extraction: everything before the
+    first '</head>' (whole document when no close tag exists), so a geo
+    meta tag in the body never overrides the TLD-anchor geocode."""
+    return s.str.split("</head>", n=1).str[0]
 
 
 def world_polygons() -> list[Polygon]:
@@ -44,38 +58,16 @@ def world_polygons() -> list[Polygon]:
     return polys
 
 
-def pages_to_geo(
-    spark: SparkSession, pages: DataFrame, verify_text: bool = False
-) -> DataFrame:
-    """Geocoded pages with cell ids. verify_text adds a ``_text_ok`` column
-    (oracle UDF output == stored text) so the invariant is checked inside
-    the SAME pass instead of a second scan."""
-    if verify_text:
-        pages = pages.withColumn(
-            "_text_ok", (extract_text_udf("html") == F.col("text")).cast("int")
-        )
-    geo = geocode_pages(spark, pages)
-    # null-safe: cell_encode on NaN would int64-cast to INT64_MIN and
-    # clip to the lat-90/lon-180 corner cell — ungeocoded rows must keep
-    # cell_id null (the fused path guards identically with its ok mask)
-    return geo.withColumn(
-        "cell_id",
-        F.when(
-            F.col("lat").isNotNull() & F.col("lon").isNotNull(),
-            cell_encode_udf(CELL_LEVEL)(F.col("lat"), F.col("lon")),
-        ),
-    )
-
-
 _FUSED_SCHEMA = (
     "url string, warc_ts timestamp, lang string, n_bytes long, "
-    "text_ok int, lat double, lon double, cell_id long"
+    "text_ok int, lat double, lon double"
 )
 
 
 def pages_to_geo_fused(pages: DataFrame, verify_text: bool = False) -> DataFrame:
-    """The pipeline's hot path: extract-verify + geocode + cell encode as
-    ONE mapInPandas pass.
+    """The pipeline's pages->geo stage: extract-verify + geocode as ONE
+    mapInPandas pass. Ungeocoded pages (foreign host, unknown TLD, no geo
+    meta) come out with null lat/lon.
 
     Chaining separate pandas UDFs costs a Python round-trip per node and —
     worse — projection collapse inlines struct-field references so the
@@ -86,15 +78,12 @@ def pages_to_geo_fused(pages: DataFrame, verify_text: bool = False) -> DataFrame
     and aggregations shuffle ~50 bytes/row instead of the full page.
     """
     import numpy as np
-    import pandas as pd
 
-    from ..functions.html_udfs import _GEO_POS_RE, _decode, head_slice
-    from ..geo.cells import cell_encode
+    from ..functions.html_udfs import _decode
     from ..oracle.html_oracle import extract_text
     from ..sources.pages import TLD_ANCHORS, splitmix64
 
     anchors = {tld: (lat, lon) for tld, (lat, lon, _) in TLD_ANCHORS.items()}
-    level = CELL_LEVEL
 
     def fused(batches):
         for pdf in batches:
@@ -104,7 +93,7 @@ def pages_to_geo_fused(pages: DataFrame, verify_text: bool = False) -> DataFrame
             else:
                 text_ok = pd.Series(np.ones(len(pdf), dtype="int32"))
             # meta geo override — geo <meta> tags live in <head>; regex only
-            # the head slice (shared spec with extract_meta_geo_udf)
+            # the head slice
             ext = head_slice(html).str.extract(_GEO_POS_RE)
             meta_lat = pd.to_numeric(ext[0], errors="coerce").to_numpy()
             meta_lon = pd.to_numeric(ext[1], errors="coerce").to_numpy()
@@ -130,7 +119,6 @@ def pages_to_geo_fused(pages: DataFrame, verify_text: bool = False) -> DataFrame
             lat = np.where(~np.isnan(meta_lat), meta_lat, h_lat)
             lon = np.where(~np.isnan(meta_lon), meta_lon, h_lon)
             ok = ~np.isnan(lat) & ~np.isnan(lon)
-            cell = np.where(ok, cell_encode(np.nan_to_num(lat), np.nan_to_num(lon), level), -1)
             out = pd.DataFrame(
                 {
                     "url": url,
@@ -142,7 +130,6 @@ def pages_to_geo_fused(pages: DataFrame, verify_text: bool = False) -> DataFrame
                     "text_ok": text_ok,
                     "lat": lat,
                     "lon": lon,
-                    "cell_id": pd.array(cell, dtype="int64"),
                 }
             )
             out.loc[~ok, ["lat", "lon"]] = None

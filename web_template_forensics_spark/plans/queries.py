@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.geo_udfs import cell_encode_udf, cell_id_sql, morton_sql, tile_ix_col, tile_ix_sql, tile_iy_col, tile_iy_sql
+from ..functions.geo_udfs import cell_encode_udf, morton_sql, tile_ix_col, tile_ix_sql, tile_iy_col, tile_iy_sql
 from ..functions.html_udfs import extract_text_udf, html_class_counts_udf
 from ..functions.text_udfs import (
     ASCII_WS_REGEX,
@@ -195,11 +195,6 @@ def _rects_values_sql() -> str:
         f"({pid}, {a!r}, {b!r}, {c!r}, {d!r})" for pid, a, b, c, d in rect_polygons()
     )
     return f"(VALUES {rows}) AS r(poly_id, lat0, lon0, lat1, lon1)"
-
-
-_ESCAPED_TEXT_SQL = (
-    "replace(replace(replace(text, '&', '&amp;'), '<', '&lt;'), '>', '&gt;')"
-)
 
 
 def _escaped_text_col():
@@ -1105,12 +1100,11 @@ def q_ann_ivf_recall(spark, sf_dir):
 
 def q_pages_pipeline_tiles(spark, sf_dir):
     """Flagship end-to-end slice on the real pages table: generate ->
-    geocode (meta tag > TLD anchor) -> cells -> salted tile rollup.
+    geocode (meta tag > TLD anchor) -> salted tile rollup.
 
-    Uses the FUSED mapInPandas path: its output columns are plan
-    attributes (never re-evaluated on downstream fan-out), so no persist
-    is needed — r1 used the unfused ArrowEval chain + a persist that was
-    never released.
+    The pages->geo stage is one mapInPandas pass whose output columns are
+    plan attributes (never re-evaluated on downstream fan-out), so no
+    persist is needed.
 
     Fully oracled since round 3: the Spark side derives lat/lon by
     PARSING the generated html (the real extract->geocode precedence),

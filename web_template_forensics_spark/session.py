@@ -13,6 +13,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(ram_bytes: int | None) -> str:
+    """Driver heap for a host with ``ram_bytes`` of physical memory: half
+    of it in whole GiB, clamped to 1g..48g (48g when the size is unknown).
+    A heap larger than the host lets the JVM grow past physical memory
+    before it collects, and the OS kills it."""
+    if not ram_bytes:
+        return "48g"
+    return f"{max(1, min(48, ram_bytes // 2 // (1 << 30)))}g"
+
+
+def _physical_ram_bytes() -> int | None:
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):  # no sysconf (Windows)
+        return None
+
+
 def get_spark(
     app_name: str = "web_template_forensics_spark",
     cores: int | None = None,
@@ -66,7 +83,11 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(n_shuffle))
         # Deterministic timestamps vs the DuckDB oracle.
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or default_driver_memory(_physical_ram_bytes()),
+        )
         .config("spark.ui.enabled", "false")
         # stdout hygiene: stage-progress bars interleave with any
         # one-line-JSON contract a caller prints (bench.py's r4 artifact

@@ -1,8 +1,1 @@
-from .pages import (  # noqa: F401
-    PAGES_SCHEMA,
-    TLD_ANCHORS,
-    build_pages_df,
-    gen_pages_pdf,
-    geocode_host,
-    splitmix64,
-)
+"""Synthetic pages, media and project-pair sources plus the lineage catalog."""
